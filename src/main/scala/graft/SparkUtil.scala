@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local SparkSession factory for mains (Bench/Verify/Profile).
+/** Shared local SparkSession factory for the mains (Bench/Verify) and the
+  * dedupbench harness.
   *
   * spark.local.dir points at tmpfs (/dev/shm) when available: local-mode
   * shuffle and spill files otherwise serialize on a single disk, which
@@ -25,8 +26,9 @@ object SparkUtil {
     * Why not plain .localCheckpoint(): its RDD blocks are invisible to the
     * cache manager and leak across jobs (measured ~2x eviction-churn CPU on
     * later jobs); the returned thunk reaches into the LogicalRDD and frees
-    * them, restoring persist/unpersist discipline. */
-  /** `eager = false` defers COMPUTE only: localCheckpoint bakes the physical
+    * them, restoring persist/unpersist discipline.
+    *
+    * `eager = false` defers COMPUTE only: localCheckpoint bakes the physical
     * plan into a LogicalRDD leaf at call time either way, so the plan/lineage
     * cut above is identical — but a lazy cut materializes inside whichever
     * downstream ACTION first demands it, instead of in its own blocking

@@ -161,16 +161,6 @@ object LshCandidates {
     (pairs, dropped)
   }
 
-  /** As fusedCandidatePairsCut, discarding the free thunk (dev/test callers
-    * that purge all persistent RDDs themselves). */
-  def fusedCandidatePairsKeys(keyed: Seq[(String, DataFrame)],
-                              idCol: String, maxBucketSize: Int,
-                              saltChunk: Int = 256): (DataFrame, DataFrame) = {
-    val (pairs, dropped, _) =
-      fusedCandidatePairsCut(keyed, idCol, maxBucketSize, saltChunk)
-    (pairs, dropped)
-  }
-
   /** As fusedCandidatePairs, from pre-built band-key relations
     * (id, band, bandVal) per modality — the entry point for callers whose
     * banding is not the single contiguous grouping (bandKeysHashedGrouped).

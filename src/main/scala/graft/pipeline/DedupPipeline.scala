@@ -32,12 +32,6 @@ final case class PipelineResult(
  */
 object DedupPipeline {
 
-  /** Per-clip feature/signature extraction — a SINGLE projection pass with
-    * zero shuffle: shingling is Catalyst built-ins, and the MinHash
-    * signatures use the row-local fast path (MinHasher.signatureUdf — a
-    * signature is a pure function of the row's shingle set; the
-    * explode+groupBy form would shuffle the exploded corpus for nothing.
-    * MinHashSpec pins the two paths equal). */
   /** Char-gram shingle column for the exact text-verify metric — exposed so
     * consumers that need shingles OUTSIDE the hub (run()'s endpoint-filtered
     * text verify, the clip_signatures oracle query) derive them from the
@@ -45,6 +39,12 @@ object DedupPipeline {
   def textShingleCol(cfg: DedupConfig): org.apache.spark.sql.Column =
     TextShingles.charGramHashesUdf(cfg.charGramK)(lower(col("transcript")))
 
+  /** Per-clip feature/signature extraction — a SINGLE projection pass with
+    * zero shuffle: shingling is Catalyst built-ins, and the MinHash
+    * signatures use the row-local fast path (MinHasher.signatureUdf — a
+    * signature is a pure function of the row's shingle set; the
+    * explode+groupBy form would shuffle the exploded corpus for nothing.
+    * MinHashSpec pins the two paths equal). */
   def signatures(spark: SparkSession, clips: DataFrame, cfg: DedupConfig): DataFrame = {
     // row-local rolling-hash shingles (TextShingles.*31Jvm): same distinct
     // k-gram identity as the Catalyst charShingles/wordShingles forms (the
@@ -237,8 +237,9 @@ object DedupPipeline {
     // serial driver actions by construction; the text/containment/exact
     // branch is independent of it until the final union. Running the two
     // chains on separate driver threads overlaps their jobs in the
-    // scheduler — measured (Profile … floor) as a direct cut to the per-run
-    // serial floor the N-vs-4N probe charges against scaling; the thread
+    // scheduler — a direct cut to the per-run serial floor the N-vs-4N
+    // probe charges against scaling (per-job floor timelines in
+    // plans/r06/floor_*_jobs.txt; BASELINE.md "Serial floor"); the thread
     // pool is driver-side only and every cut stays EAGER (a lazy cut here
     // lets concurrent broadcast subtrees thundering-herd recompute the
     // uncached plan — measured +50% sum-job-wall).

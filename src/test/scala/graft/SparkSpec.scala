@@ -17,6 +17,9 @@ object TestSpark {
       // the driver on a deep plan (observed at 32g heap)
       .config("spark.sql.maxPlanStringLength", "8192")
       .config("spark.sql.ui.explainMode", "simple")
+      // a generated method over the JVM's 64 KB limit fails the spec instead
+      // of silently falling back to interpreted execution
+      .config("spark.sql.codegen.fallback", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", graft.SparkUtil.localDir)
