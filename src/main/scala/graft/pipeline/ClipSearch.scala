@@ -22,6 +22,13 @@ import org.apache.spark.sql.functions._
  * `index.search` equi-cost re-expressed as partition-pruned table reads.
  * Byte-heavy verifies then read only the candidate ids' buckets of the
  * signature/clip tables.
+ *
+ * A call makes three bucket-set driver actions (IncrementalDedup.bucketSets,
+ * one single-stage job each), one per dependency level, since each level's
+ * reads need the previous level's rows: probe -> {bands, fps, exactKeys},
+ * candidates -> {signatures, clips for transcripts}, audio survivors ->
+ * {clips for PCM bytes}. Table reads run no schema-inference job (LakeTable
+ * passes the snapshot's recorded schema).
  */
 object ClipSearch {
 
@@ -50,8 +57,11 @@ object ClipSearch {
 
     // ---- candidates from the value-bucketed inverted indexes ----
     val pBands = IncrementalDedup.bandRows(probeSigs, cfg)
-    val storedBands = visible(store.bands.readBuckets(spark,
-      IncrementalDedup.bucketsOf(pBands, store.bands)))
+    val pFps = IncrementalDedup.fpRows(probeSigs)
+    val pKeys = IncrementalDedup.keyRows(probeSigs)
+    val Seq(bandBkts, fpBkts, keyBkts) = IncrementalDedup.bucketSets(Seq(
+      pBands -> store.bands, pFps -> store.fps, pKeys -> store.exactKeys))
+    val storedBands = visible(store.bands.readBuckets(spark, bandBkts))
     // same hot-band guard as the batch/incremental paths (counts complete:
     // a bandVal's rows all live in one store bucket)
     val bSizes = storedBands.groupBy("modality", "band", "bandVal")
@@ -66,9 +76,7 @@ object ClipSearch {
       .select("probe_id", "match_id", "modality")
       .dropDuplicates("probe_id", "match_id", "modality"))
 
-    val pFps = IncrementalDedup.fpRows(probeSigs)
-    val storedFps = visible(store.fps.readBuckets(spark,
-      IncrementalDedup.bucketsOf(pFps, store.fps)))
+    val storedFps = visible(store.fps.readBuckets(spark, fpBkts))
     val fpSizes = storedFps.groupBy("fp").agg(count(lit(1)).as("n"))
     val fpKept = storedFps.join(fpSizes.filter(col("n") <= cfg.containmentMaxBucket), "fp")
     val (cCands, freeCCands) = graft.SparkUtil.checkpointCut(
@@ -79,9 +87,7 @@ object ClipSearch {
         .dropDuplicates("probe_id", "match_id"))
 
     // exact identity: probe keys vs the stored key index
-    val pKeys = IncrementalDedup.keyRows(probeSigs)
-    val storedKeys = visible(store.exactKeys.readBuckets(spark,
-      IncrementalDedup.bucketsOf(pKeys, store.exactKeys)))
+    val storedKeys = visible(store.exactKeys.readBuckets(spark, keyBkts))
     val exact = pKeys.select(col("clip_id").as("probe_id"), col("k"))
       .join(storedKeys.select(col("clip_id").as("match_id"), col("k")), "k")
       .filter(col("probe_id") =!= col("match_id"))
@@ -90,18 +96,10 @@ object ClipSearch {
       .dropDuplicates("probe_id", "match_id")
 
     // ---- verify on candidate ids only (bucket-pruned feature reads) ----
+    // candidate id lists keep duplicates: they only feed bucket sets and
+    // left-semi joins, and a distinct would cost an exchange per list
     val matchIds = bandCands.select(col("match_id").as("clip_id"))
       .union(cCands.select(col("match_id").as("clip_id")))
-      .distinct()
-    // semi-join to the matched candidate ids (same pruning as the merge
-    // path): the bucket slice still holds every co-bucketed row, and a probe
-    // whose band values hash across many buckets would otherwise drag whole
-    // signature-table slices into all four scored joins below
-    val (stored, freeStored) = graft.SparkUtil.checkpointCut(
-      visible(store.signatures.readBuckets(spark,
-        IncrementalDedup.bucketsOf(matchIds, store.signatures)))
-        .join(matchIds, Seq("clip_id"), "left_semi"))
-
     // narrow-store discipline: the signature table carries no transcripts
     // or char-gram shingles (its two widest columns); the text/containment
     // verifies read transcripts from the bucket-pruned CLIPS table for the
@@ -109,10 +107,17 @@ object ClipSearch {
     val txtIds = bandCands.filter(col("modality") === "text")
       .select(col("match_id").as("clip_id"))
       .union(cCands.select(col("match_id").as("clip_id")))
-      .distinct()
+    val Seq(sigBkts, txtBkts) = IncrementalDedup.bucketSets(Seq(
+      matchIds -> store.signatures, txtIds -> store.clips))
+    // semi-join to the matched candidate ids (same pruning as the merge
+    // path): the bucket slice still holds every co-bucketed row, and a probe
+    // whose band values hash across many buckets would otherwise drag whole
+    // signature-table slices into all four scored joins below
+    val (stored, freeStored) = graft.SparkUtil.checkpointCut(
+      visible(store.signatures.readBuckets(spark, sigBkts))
+        .join(matchIds, Seq("clip_id"), "left_semi"))
     val (matchTxt, freeMatchTxt) = graft.SparkUtil.checkpointCut(
-      visible(store.clips.readBuckets(spark,
-        IncrementalDedup.bucketsOf(txtIds, store.clips)))
+      visible(store.clips.readBuckets(spark, txtBkts))
         .join(txtIds, Seq("clip_id"), "left_semi")
         .select(col("clip_id"), col("transcript")))
 
@@ -141,7 +146,7 @@ object ClipSearch {
       .select("probe_id", "match_id", "score"))
     // PCM confirm on survivors only: probe bytes join + pruned clips read
     val corr = udf((x: Array[Byte], y: Array[Byte]) => PairVerifier.pcmCorrJvm(x, y))
-    val neededIds = aScored.select(col("match_id").as("clip_id")).distinct()
+    val neededIds = aScored.select(col("match_id").as("clip_id"))
     val matchBytes = visible(store.clips.readBuckets(spark,
       IncrementalDedup.bucketsOf(neededIds, store.clips)))
       .join(neededIds, Seq("clip_id"), "left_semi")

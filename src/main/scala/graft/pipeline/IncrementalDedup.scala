@@ -103,11 +103,32 @@ object IncrementalDedup {
       concat(lit("s:"), col("sha")), concat(lit("t:"), col("tHashExact"))),
       x => x.isNotNull)).as("k"))
 
-  /** Distinct store-bucket ids of `df`'s key column — the tiny driver action
-    * (<= numBuckets ints) that turns a delta's values into a pruned read. */
+  /** Store-bucket ids of each (frame, table) request's key column — the
+    * driver action that turns a delta's or probe's values into pruned reads.
+    * Every request is answered by ONE job of one stage with no exchange
+    * (beyond any the frames' own plans hold): each task folds its rows into
+    * a bitset of its request's numBuckets bits, and the driver ORs the task
+    * bitsets as they arrive, so driver memory is O(requests x numBuckets)
+    * at any row count. Callers batch the requests of one dependency level
+    * into one call: each call is a blocking driver round trip. */
+  def bucketSets(requests: Seq[(DataFrame, LakeTable)]): Seq[Set[Int]] =
+    if (requests.isEmpty) Seq.empty
+    else {
+      import java.util.BitSet
+      val sc = requests.head._1.sparkSession.sparkContext
+      val tagged = requests.zipWithIndex.map { case ((df, t), i) =>
+        df.select(t.bucketOf.cast("int")).queryExecution.toRdd
+          .map(row => (i, row.getInt(0)))
+      }
+      val bits = sc.union(tagged).aggregate(Array.fill(requests.size)(new BitSet))(
+        (acc, ib) => { acc(ib._1).set(ib._2); acc },
+        (a, b) => { a.indices.foreach(i => a(i).or(b(i))); a })
+      bits.toSeq.map(_.stream().toArray.toSet)
+    }
+
+  /** Store-bucket ids of one frame's key column (see bucketSets). */
   private[pipeline] def bucketsOf(df: DataFrame, t: LakeTable): Set[Int] =
-    df.select(t.bucketOf.cast("int").as("b")).distinct()
-      .collect().map(_.getInt(0)).toSet
+    bucketSets(Seq(df -> t)).head
 
   /** Full rebuild (the reference's --force-rebuild, G6).
     *
@@ -479,17 +500,22 @@ object IncrementalDedup {
 
     // index tables: stale rows of delta ids die, delta rows arrive, rows of
     // deleted ids stay but are tombstone-flagged (searchable until compact)
-    def updateIndex(t: LakeTable, newRows: DataFrame, oldRows: DataFrame): Unit = {
-      val touched = bucketsOf(newRows, t) ++ bucketsOf(oldRows, t)
+    // All six touched-bucket sets come from one bucketSets job before the
+    // three commits: their inputs are cut (persisted / checkpointed) and
+    // none of them reads an index table.
+    val indexUpdates = Seq(
+      (store.bands, deltaBands, bandRows(oldSigs, cfg)),
+      (store.fps, deltaFps, fpRows(oldSigs)),
+      (store.exactKeys, deltaKeys, keyRows(oldSigs)))
+    val indexTouched = bucketSets(indexUpdates.flatMap { case (t, newRows, oldRows) =>
+      Seq(newRows -> t, oldRows -> t) }).grouped(2).map(_.reduce(_ ++ _)).toSeq
+    indexUpdates.zip(indexTouched).foreach { case ((t, newRows, _), touched) =>
       val content = applyDeletes(
         t.readBuckets(spark, touched)
           .join(deltaIds, Seq("clip_id"), "left_anti")
           .unionByName(newRows.withColumn("is_deleted", lit(false))))
       t.commitDelta(content, touched, "merge")
     }
-    updateIndex(store.bands, deltaBands, bandRows(oldSigs, cfg))
-    updateIndex(store.fps, deltaFps, fpRows(oldSigs))
-    updateIndex(store.exactKeys, deltaKeys, keyRows(oldSigs))
 
     val nNew = newPairs.count()
     // pairs bucket on `a`; an edge dies if EITHER endpoint is invalid, and
@@ -558,21 +584,20 @@ object IncrementalDedup {
     * Without this a long-running store grows without bound in both data and
     * snapshot count. */
   def compact(spark: SparkSession, store: DedupStore, retain: Int = 1): Unit = {
-    Seq(store.clips, store.signatures, store.bands, store.fps, store.exactKeys)
-      .foreach { t =>
-        // BUCKET-PRUNED rewrite: only buckets that contain a tombstoned row
-        // are compacted; every clean bucket's files are reused through the
-        // copy-on-write manifest. Finding them scans just the (key,
-        // is_deleted) columns (parquet column pruning), so compaction I/O is
-        // proportional to tombstone spread, not table size.
-        val tombBkts = t.read(spark).filter(col("is_deleted"))
-          .select(t.bucketOf.cast("int").as("b")).distinct()
-          .collect().map(_.getInt(0)).toSet
-        if (tombBkts.nonEmpty)
-          t.commitDelta(t.readBuckets(spark, tombBkts).filter(!col("is_deleted")),
-            tombBkts, "compact",
-            Map("compacted_buckets" -> tombBkts.size.toLong))
-      }
+    // BUCKET-PRUNED rewrite: only buckets that contain a tombstoned row are
+    // compacted; every clean bucket's files are reused through the
+    // copy-on-write manifest. Finding them scans just the (key, is_deleted)
+    // columns (parquet column pruning), so compaction I/O is proportional to
+    // tombstone spread, not table size — one bucketSets job for all tables.
+    val rowTables = Seq(store.clips, store.signatures, store.bands, store.fps,
+      store.exactKeys)
+    val tombSets = bucketSets(rowTables.map(t => t.read(spark).filter(col("is_deleted")) -> t))
+    rowTables.zip(tombSets).foreach { case (t, tombBkts) =>
+      if (tombBkts.nonEmpty)
+        t.commitDelta(t.readBuckets(spark, tombBkts).filter(!col("is_deleted")),
+          tombBkts, "compact",
+          Map("compacted_buckets" -> tombBkts.size.toLong))
+    }
     Seq(store.clips, store.signatures, store.dupPairs, store.clusters,
       store.clustersByComp, store.bands, store.fps, store.exactKeys)
       .foreach(_.expireSnapshots(retain))

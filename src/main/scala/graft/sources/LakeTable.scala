@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
@@ -23,6 +24,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
  *       unTOUCHED buckets point at a PREVIOUS version's directory (the
  *       copy-on-write manifest reuse that makes a merge write O(delta) bytes
  *       while compute stays O(delta))
+ *   <root>/<name>/_snapshots/v<NNN>.schema   — the snapshot's logical schema
+ *       (StructType JSON); every read passes it to the parquet reader, so
+ *       no read runs a schema-inference job over the data files
  *   <root>/<name>/_snapshots/LATEST          — pointer, atomic rename
  *
  * Replaces the reference's pickled detector state + positional FAISS files
@@ -52,22 +56,25 @@ final class LakeTable(val root: String, val name: String,
   private def bucketsFile(v: Int): Path = snapDir.resolve(s"v$v.buckets")
   private def schemaFile(v: Int): Path = snapDir.resolve(s"v$v.schema")
 
-  /** Persist the snapshot's logical schema so a committed-but-empty snapshot
-    * (e.g. compact() after every row was tombstoned) stays readable — a
-    * zero-path spark.read.parquet throws, so empty reads rebuild from this. */
-  private def writeSchema(v: Int, schema: org.apache.spark.sql.types.StructType): Unit = {
+  /** Persist the snapshot's logical schema. Reads load it instead of
+    * inferring one from parquet footers (a one-task Spark job per read), and
+    * it keeps a committed-but-empty snapshot (e.g. compact() after every row
+    * was tombstoned) readable — a zero-path spark.read.parquet throws. */
+  private def writeSchema(v: Int, schema: StructType): Unit = {
     Files.createDirectories(snapDir)
     Files.write(schemaFile(v),
       schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
   }
 
-  private def emptyDf(spark: SparkSession, v: Int): DataFrame = {
-    require(Files.exists(schemaFile(v)),
-      s"table $name v$v has no data buckets and no recorded schema")
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(new String(Files.readAllBytes(schemaFile(v))))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** Scan of snapshot v's `dirs` under its recorded schema: no inference job
+    * (path listing stays serial up to the parallelPartitionDiscovery
+    * threshold of 32 dirs). */
+  private def scan(spark: SparkSession, v: Int, dirs: Seq[String]): DataFrame = {
+    require(Files.exists(schemaFile(v)), s"table $name v$v has no recorded schema")
+    val schema = DataType.fromJson(new String(Files.readAllBytes(schemaFile(v))))
+      .asInstanceOf[StructType]
+    if (dirs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).parquet(dirs: _*)
   }
 
   /** bucket -> data dir for snapshot v (every bucket present). */
@@ -83,8 +90,7 @@ final class LakeTable(val root: String, val name: String,
   def read(spark: SparkSession, version: Int = -1): DataFrame = {
     val v = if (version >= 0) version else currentVersion
     require(v >= 0, s"table $name has no committed snapshot")
-    val dirs = bucketMap(v).values.toSeq.distinct.sorted
-    if (dirs.isEmpty) emptyDf(spark, v) else spark.read.parquet(dirs: _*)
+    scan(spark, v, bucketMap(v).values.toSeq.distinct.sorted)
   }
 
   /** Bucket-pruned read: only the data directories of `buckets` are scanned
@@ -96,13 +102,13 @@ final class LakeTable(val root: String, val name: String,
     require(v >= 0, s"table $name has no committed snapshot")
     val dirs = bucketMap(v).filter(kv => buckets.contains(kv._1))
       .values.toSeq.distinct.sorted
-    // Empty selection -> schema-based empty frame, NEVER read(spark).limit(0):
-    // spark.read.parquet EAGERLY lists its paths, and above the
-    // parallelPartitionDiscovery threshold (32) that listing is a Spark job
-    // with one task per bucket dir — a full-table O(B) listing (measured:
-    // 2 x 4096 tasks, 10.5 s of a 37 s merge at B=4096) for a call that
-    // returns zero rows by construction.
-    if (dirs.isEmpty) emptyDf(spark, v) else spark.read.parquet(dirs: _*)
+    // Empty selection -> scan()'s schema-based empty frame, NEVER
+    // read(spark).limit(0): spark.read.parquet EAGERLY lists its paths, and
+    // above the parallelPartitionDiscovery threshold (32) that listing is a
+    // Spark job with one task per bucket dir — a full-table O(B) listing
+    // (measured: 2 x 4096 tasks, 10.5 s of a 37 s merge at B=4096) for a
+    // call that returns zero rows by construction.
+    scan(spark, v, dirs)
   }
 
   private def writeBuckets(df: DataFrame, v: Int,

@@ -292,9 +292,16 @@ class IncrementalSpec extends SparkSpec {
     // with one task per bucket dir, i.e. a full O(B) listing (measured 2x4096
     // tasks, 10.5 s of a 37 s merge at B=4096) for a zero-row frame. The
     // snapshot's recorded schema answers without touching data at all.
+    // Non-empty reads pass that schema to the parquet reader too: inferring
+    // it from the files was a one-task job per read, before any action.
     val root = java.nio.file.Files.createTempDirectory("graft-empty-read").toString
     val t = new graft.sources.LakeTable(root, "t", "clip_id", 4096)
     t.commit(clipsRange(0, 50).select("clip_id", "transcript"), "create")
+    // 32 buckets: at most 32 dirs, which Spark lists on the driver
+    val u = new graft.sources.LakeTable(root, "u", "clip_id", 32)
+    val committed = clipsRange(0, 200).select("clip_id", "transcript")
+    u.commit(committed, "create")
+    assert(Set(0, 1, 2).subsetOf(u.bucketMap(0).keySet))
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -303,15 +310,56 @@ class IncrementalSpec extends SparkSpec {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    val df = try {
+    val (df, some, all) = try {
       val df = t.readBuckets(spark, Set.empty)
+      val some = u.readBuckets(spark, Set(0, 1, 2))
+      val all = u.read(spark)
       Thread.sleep(500) // async listener bus; zero expected, so a beat is enough
-      df
+      (df, some, all)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get() == 0,
-      s"empty readBuckets ran ${jobs.get()} jobs — the O(B) listing is back")
+      s"reads ran ${jobs.get()} jobs before an action — the O(B) listing " +
+        "or parquet schema inference is back")
     assert(df.count() == 0)
     assert(df.columns.toSeq == Seq("clip_id", "transcript"))
+    Seq(some, all).foreach(r => assert(r.columns.toSeq == committed.columns.toSeq))
+    assert(all.count() == 200)
+    assert(some.count() == committed.filter(u.bucketOf.isin(0, 1, 2)).count())
+  }
+
+  test("bucketSets answers several frames in one job of one stage") {
+    val byId = new graft.sources.LakeTable("unused", "ids", "clip_id", 32)
+    val byKey = new graft.sources.LakeTable("unused", "keys", "k", 64)
+    val byFp = new graft.sources.LakeTable("unused", "fps", "fp", 1024)
+    val requests = Seq(
+      clipsRange(0, 100).select("clip_id") -> byId,
+      spark.range(0, 500, 1, 4).select(concat(lit("k"), col("id")).as("k")) -> byKey,
+      spark.range(0, 0, 1, 4).select(col("id").as("fp")) -> byFp)
+    val oracle = requests.map { case (df, t) =>
+      df.select(t.bucketOf.cast("int")).distinct().collect().map(_.getInt(0)).toSet
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
+    val stages = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(): Unit
+      }
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet(): Unit
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val sets = try {
+      val sets = IncrementalDedup.bucketSets(requests)
+      Thread.sleep(500) // async listener bus
+      sets
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(sets == oracle)
+    assert(sets(2).isEmpty && sets(0).nonEmpty && sets(1).nonEmpty)
+    assert((jobs.get(), stages.get()) == ((1L, 1L)),
+      s"bucketSets ran ${jobs.get()} jobs / ${stages.get()} stages, expected 1 / 1")
   }
 
   test("O(delta) commit bytes hold at 1024 buckets where 32 would rewrite everything") {
